@@ -5,7 +5,7 @@ Round-3 gap this closes: ``lsh_cosine_topk`` / ``ivf_cosine_topk``
 the WHOLE corpus on every call — fine for one-shot jobs, wrong for a query
 service. The reference-world analogue is PISA holding a built impact index
 between queries (efficient_splade_pisa/README.md:47-59); the repo's own
-BM25 analogue is ``prepare_serving`` (query/wand.py:149).
+BM25 analogue is ``prepare_serving`` (query/wand.py).
 
 Layout: one parquet table per index, hive-partitioned by the coarse key
 (``bucket`` for LSH, ``cell`` for IVF) with the raw embeddings co-located

@@ -5,9 +5,10 @@ Reference analogues: the exact numba TAAT kernel
 a block_simdbp impact index (efficient_splade_pisa/README.md:28-38). Spark
 design: the index is document-sharded (index/build.py), so retrieval is
 
-    postings ⋈ broadcast(query terms)        -- term pruning, broadcast join
-      → groupBy(shard_id).applyInPandas(kernel)  -- per-shard top-k
-      → window top-k merge                    -- global (score desc, doc asc)
+    postings ⋈ query terms                 -- term pruning (INSET or semi-join)
+      → repartitionById(shard_id)           -- whole shards, one task wave
+      → mapInPandas(kernel)                 -- per-shard top-k
+      → window or driver top-k merge        -- global (score desc, doc asc)
 
 The kernel scores in the *integer* quantized-impact domain (exact in int64),
 so per-shard results and the final merge are bit-deterministic and
@@ -230,30 +231,32 @@ def _score_query_in_shard(
     return top_docs, top_scores
 
 
-def prepare_serving(
-    postings: DataFrame, num_shards: int, partitions: int | None = None
-) -> DataFrame:
-    """Shuffle the postings by shard_id ONCE for a query-serving loop.
+def place_shards(postings: DataFrame, num_shards: int) -> DataFrame:
+    """Direct shard→partition placement: shard s lands in partition s mod P,
+    P = min(num_shards, default parallelism).
+
+    Every partition holds whole shards (the kernel's rank-safety
+    precondition) and carries a shard load balanced to within one shard,
+    so the kernel stage is ONE task wave with no empty tasks. A hash
+    repartition on shard_id needs oversubscription to dodge collisions
+    (Murmur3 stacks 4 of 8 shards on one of 4 partitions), and one-shot
+    queries are task-launch-bound. The explicit partition count also keeps
+    AQE's coalescePartitions off this CPU-heavy, byte-light stage."""
+    par = postings.sparkSession.sparkContext.defaultParallelism
+    return postings.repartitionById(min(num_shards, par), "shard_id")
+
+
+def prepare_serving(postings: DataFrame, num_shards: int) -> DataFrame:
+    """Place the postings by shard_id ONCE for a query-serving loop.
 
     Pass the (cached) result to ``retrieve(..., prepartitioned=True)``:
-    the per-query term filter preserves this partitioning, so every
+    the per-query term filter preserves this placement, so every
     subsequent batch runs as a single scan→kernel stage plus the top-k
     merge — no per-query shuffle. This is the warm-serving analogue of
     PISA holding its index memory-mapped between queries
-    (efficient_splade_pisa/README.md:47-59).
-
-    partitions defaults to ONE task wave (max(num_shards, default
-    parallelism)) — interactive latency is task-launch-bound, and the 4x
-    shard oversubscription retrieve() uses for heavy batch scoring
-    (anti-skew: hash collisions stacking shards on one task) triples
-    single-query p50 here (measured 1.08 s vs 0.36 s at sf0.1 / 32
-    cores). For a serving frame that will mostly take LARGE batches,
-    pass partitions=4*num_shards explicitly."""
-    spark = postings.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if partitions is None:
-        partitions = max(num_shards, par)
-    return postings.repartition(partitions, "shard_id")
+    (efficient_splade_pisa/README.md:47-59). The layout is the one task
+    wave ``place_shards`` gives every retrieve() call."""
+    return place_shards(postings, num_shards)
 
 
 def retrieve(
@@ -277,8 +280,8 @@ def retrieve(
     ``bm25.bm25_topk`` on integer-quantized weights.
 
     num_shards: pass the value from _index_meta.json — when omitted, an
-    extra max(shard_id) Spark job runs per batch (a full postings-scan in
-    a query-serving loop). bits: quantization width from the same meta
+    extra max(shard_id) Spark job over the term-filtered postings runs per
+    batch. bits: quantization width from the same meta
     (u8/u16 weight bytes decode differently; a mismatch is garbage scores).
 
     merge: 'window' runs the global (score desc, doc asc) top-k as a Spark
@@ -297,8 +300,11 @@ def retrieve(
     × 4096 shards would be 410M driver rows.
 
     prepartitioned: postings came from ``prepare_serving`` (already
-    shuffled by shard_id) — skip the per-batch repartition; the term
-    filter preserves the partitioning, so a batch costs one Spark stage.
+    placed by shard_id) — skip the per-batch placement; the term filter
+    preserves it, so a batch costs one Spark stage.
+
+    A batch with no query term rows (every query empty after
+    tokenization) returns the empty result without running a Spark job.
     """
     check_bits(bits)
     if merge not in ("window", "driver", "auto"):
@@ -308,36 +314,14 @@ def retrieve(
             f"merge must be 'window', 'driver' or 'auto', got {merge!r}"
         )
     spark = postings.sparkSession
+    out_schema = "query_id string, doc_id long, score double, rank int"
     if isinstance(query_terms, pd.DataFrame):
         # query-service path: terms already driver-side, skip the Spark job
         qpdf = query_terms[["query_id", "term_id", "qtf"]]
     else:
         qpdf = query_terms.select("query_id", "term_id", "qtf").toPandas()
-    if merge == "auto":
-        if num_shards is None:
-            merge = "window"  # unknown shard count → can't bound the collect
-        else:
-            bound = qpdf["query_id"].nunique() * k * num_shards
-            merge = "driver" if bound <= DRIVER_MERGE_MAX_ROWS else "window"
-    elif merge == "driver" and not force_driver_merge and num_shards is not None:
-        # an explicit driver merge must honor the same collect bound the
-        # auto mode enforces: n_queries × k × num_shards rows land on the
-        # driver, and a huge batch forced down this path OOMs it. Callers
-        # who have sized their driver can pass force_driver_merge=True.
-        bound = qpdf["query_id"].nunique() * k * num_shards
-        if bound > DRIVER_MERGE_MAX_ROWS:
-            raise ValueError(
-                f"merge='driver' would collect up to {bound} rows "
-                f"(> DRIVER_MERGE_MAX_ROWS={DRIVER_MERGE_MAX_ROWS}); use "
-                "merge='window'/'auto' or pass force_driver_merge=True"
-            )
-    bq = spark.sparkContext.broadcast(
-        [
-            (qid, list(zip(g["term_id"].tolist(), g["qtf"].tolist())))
-            for qid, g in qpdf.groupby("query_id")
-        ]
-    )
-    theta0 = int(np.floor(threshold * scale))
+    if qpdf.empty:
+        return spark.createDataFrame([], out_schema)
 
     # term pruning: small term sets go in as an INSET literal (pushed into
     # the parquet scan as row-group stats filters); large batches use a
@@ -352,11 +336,35 @@ def retrieve(
             [(int(t),) for t in term_ids], "term_id long"
         )
         relevant = postings.join(F.broadcast(tid_df), "term_id", "left_semi")
+    if num_shards is None:
+        row = relevant.agg(F.max("shard_id")).collect()[0]
+        num_shards = int(row[0] or 0) + 1
+
+    # the driver merge collects up to n_queries × k × num_shards rows; an
+    # explicit merge='driver' honors the same bound 'auto' uses, since a
+    # huge batch forced down this path OOMs the driver. Callers who have
+    # sized their driver can pass force_driver_merge=True.
+    bound = qpdf["query_id"].nunique() * k * num_shards
+    if merge == "auto":
+        merge = "driver" if bound <= DRIVER_MERGE_MAX_ROWS else "window"
+    elif merge == "driver" and not force_driver_merge and bound > DRIVER_MERGE_MAX_ROWS:
+        raise ValueError(
+            f"merge='driver' would collect up to {bound} rows "
+            f"(> DRIVER_MERGE_MAX_ROWS={DRIVER_MERGE_MAX_ROWS}); use "
+            "merge='window'/'auto' or pass force_driver_merge=True"
+        )
+    bq = spark.sparkContext.broadcast(
+        [
+            (qid, list(zip(g["term_id"].tolist(), g["qtf"].tolist())))
+            for qid, g in qpdf.groupby("query_id")
+        ]
+    )
+    theta0 = int(np.floor(threshold * scale))
 
     def kernel(batches) -> "pd.DataFrame":
         """Per-partition: buffer the (small, term-filtered) block rows,
         then score every query against every complete shard group present.
-        Partitions hold whole shards (explicit repartition by shard_id)."""
+        Partitions hold whole shards (place_shards)."""
         parts = [pdf for pdf in batches if len(pdf)]
         if not parts:
             return
@@ -412,23 +420,10 @@ def retrieve(
                 out_s.extend(scores.tolist())
         yield pd.DataFrame({"query_id": out_q, "doc_id": out_d, "score_int": out_s})
 
-    # explicit partition count: AQE's coalescePartitions would fold this
-    # CPU-heavy, byte-light stage into one partition (the shuffled blocks
-    # are small even when the scoring work isn't) — user-specified
-    # repartition(N) is exempt. Oversubscribe 4x so hash collisions don't
-    # stack multiple heavy shards on one task.
-    if prepartitioned:
-        arranged = relevant  # prepare_serving already shuffled by shard_id
-    else:
-        if num_shards is None:
-            row = relevant.agg(F.max("shard_id")).collect()[0]
-            num_shards = int(row[0] or 0) + 1
-        par = spark.sparkContext.defaultParallelism
-        arranged = relevant.repartition(max(4 * num_shards, par), "shard_id")
+    arranged = relevant if prepartitioned else place_shards(relevant, num_shards)
     local = arranged.mapInPandas(
         kernel, schema="query_id string, doc_id long, score_int long"
     )
-    out_schema = "query_id string, doc_id long, score double, rank int"
     if merge == "driver":
         pdf = local.toPandas()
         # the job is done — free the per-call query-terms broadcast now.
@@ -439,10 +434,7 @@ def retrieve(
         # this: its job runs after retrieve() returns.)
         bq.unpersist(blocking=False)
         if len(pdf) == 0:
-            merged = pd.DataFrame(
-                {"query_id": [], "doc_id": [], "score": [], "rank": []}
-            )
-            return spark.createDataFrame(merged, schema=out_schema)
+            return spark.createDataFrame([], out_schema)
         # one vectorized global merge instead of a per-query pandas groupby
         # loop (5000-query batches spent ~as long in frame construction as
         # in scoring): lexsort the whole collect by (group, score desc,

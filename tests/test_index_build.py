@@ -226,11 +226,9 @@ def test_driver_merge_equals_window_merge(spark, corpus, tmp_path):
         merge="driver", prepartitioned=True,
     )
     assert sorted(map(key, win.collect())) == sorted(map(key, srv.collect()))
-    # serving defaults to ONE task wave (latency path); explicit partitions
-    # override for batch-heavy serving frames
+    # serving is ONE task wave of whole shards (test_shard_placement_one_wave)
     par = spark.sparkContext.defaultParallelism
-    assert serving.rdd.getNumPartitions() == max(4, par)
-    assert prepare_serving(postings, 4, partitions=16).rdd.getNumPartitions() == 16
+    assert serving.rdd.getNumPartitions() == min(4, par)
     serving.unpersist()
     # same column names and types (nullability differs: createDataFrame
     # marks driver-built columns nullable)
@@ -239,8 +237,7 @@ def test_driver_merge_equals_window_merge(spark, corpus, tmp_path):
     ]
     # merge='auto': small batch resolves to the driver path (results
     # identical either way; the plan check is that it doesn't throw and
-    # matches), an over-bound k×shards product falls back to window, and
-    # an unknown shard count cannot bound the collect → window
+    # matches), and an over-bound k×shards product falls back to window
     aut = retrieve(postings, qt, scale, k=15, num_shards=4, merge="auto")
     assert sorted(map(key, win.collect())) == sorted(map(key, aut.collect()))
     from splade_spark.query import wand as _wand
@@ -283,3 +280,146 @@ def test_explicit_driver_merge_guarded(spark, corpus, tmp_path):
         retrieve(postings, qt, scale, k=5, num_shards=4, merge="auto").count()
     finally:
         wand_mod.DRIVER_MERGE_MAX_ROWS = old
+
+
+def test_driver_merge_guard_discovers_num_shards(spark, corpus, tmp_path):
+    """An omitted num_shards is discovered BEFORE the explicit driver-merge
+    collect bound, so the guard cannot be skipped by leaving it out."""
+    import pandas as pd
+
+    from splade_spark.query import wand as wand_mod
+
+    _, w, scale = corpus
+    path = str(tmp_path / "idx_guard_none")
+    build_index(w, path, scale, num_shards=4)
+    postings = load_postings(spark, path)
+    qt = pd.DataFrame({"query_id": ["q1", "q2"], "term_id": [1, 2], "qtf": [1, 1]})
+    old = wand_mod.DRIVER_MERGE_MAX_ROWS
+    wand_mod.DRIVER_MERGE_MAX_ROWS = 1  # 2 queries x 5 x (>= 1 shard) > 1
+    try:
+        with pytest.raises(ValueError, match="DRIVER_MERGE_MAX_ROWS"):
+            retrieve(postings, qt, scale, k=5, merge="driver")
+    finally:
+        wand_mod.DRIVER_MERGE_MAX_ROWS = old
+
+
+def test_empty_query_batch_short_circuit(spark, corpus, tmp_path):
+    """All-OOV and empty queries return the empty result with the normal
+    result's column names and types; a batch with no term rows at all runs
+    no Spark job."""
+    import pandas as pd
+
+    _, w, scale = corpus
+    path = str(tmp_path / "idx_empty_q")
+    build_index(w, path, scale, num_shards=4)
+    postings = load_postings(spark, path)
+    normal = retrieve(postings, query_term_freqs(queries_df(spark)), scale, k=5)
+    cols = [(f.name, f.dataType) for f in normal.schema]
+    # OOV terms still hash to term ids (the kernel finds no postings); the
+    # empty text tokenizes to no row
+    oov = query_term_freqs(
+        spark.createDataFrame(
+            [("q1", "zzqxv qqzzx"), ("q2", "")], "query_id string, text string"
+        )
+    )
+    empty_pd = pd.DataFrame(
+        {"query_id": pd.Series([], dtype=object), "term_id": pd.Series([], dtype="int64"),
+         "qtf": pd.Series([], dtype="int64")}
+    )
+    sc = spark.sparkContext
+    for merge in ("window", "driver", "auto"):
+        got = retrieve(postings, oov, scale, k=5, merge=merge)
+        assert got.count() == 0
+        assert [(f.name, f.dataType) for f in got.schema] == cols
+        sc.setJobGroup("empty_query_batch", "empty query batch")
+        try:
+            got = retrieve(postings, empty_pd, scale, k=5, num_shards=4, merge=merge)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("empty_query_batch") == []
+        assert [(f.name, f.dataType) for f in got.schema] == cols
+        assert got.count() == 0
+
+
+def test_shard_placement_one_wave(spark, corpus, tiny_transcripts, tiny_documents,
+                                  tmp_path, monkeypatch):
+    """The kernel input and the prepare_serving frame hold whole shards in
+    min(num_shards, parallelism) partitions — shard s in partition s mod P —
+    for single indexes and a base ∪ segment union, and retrieval stays
+    rank- and score-identical to the quantized oracle under every merge."""
+    from splade_spark.query import wand as wand_mod
+    from splade_spark.query.wand import prepare_serving
+    from splade_spark.streaming.incremental import (
+        FrozenStats,
+        build_segment_from_batch,
+        load_all_postings,
+        set_doc_watermark,
+    )
+
+    tf, w, scale = corpus
+    par = spark.sparkContext.defaultParallelism
+    qt = query_term_freqs(queries_df(spark)).cache()
+    qt_pd = qt.toPandas()
+    placed = []
+    real_place = wand_mod.place_shards
+
+    def spy(df, num_shards):
+        placed.append((real_place(df, num_shards), num_shards))
+        return placed[-1][0]
+
+    monkeypatch.setattr(wand_mod, "place_shards", spy)
+
+    def assert_whole_shards(df, num_shards):
+        p = min(num_shards, par)
+        assert df.rdd.getNumPartitions() == p
+        owners = {}
+        for r in df.select("shard_id", F.spark_partition_id().alias("pid")).distinct().collect():
+            owners.setdefault(r.shard_id, set()).add(r.pid)
+        assert owners and all(pids == {s % p} for s, pids in owners.items()), owners
+
+    def rows(df):
+        return sorted((r.query_id, r.rank, r.doc_id, round(r.score, 9)) for r in df.collect())
+
+    def check(postings, num_shards, weights):
+        expected = rows(bm25_topk(weights, qt, k=10, scale=scale))
+        assert expected
+        serving = prepare_serving(postings, num_shards).cache()
+        assert_whole_shards(serving, num_shards)
+        for merge in ("window", "driver", "auto"):
+            placed.clear()
+            got = retrieve(postings, qt_pd, scale, k=10, num_shards=num_shards, merge=merge)
+            assert rows(got) == expected, (num_shards, merge)
+            assert len(placed) == 1 and placed[0][1] == num_shards
+            assert_whole_shards(placed[0][0], num_shards)
+        srv = retrieve(serving, qt_pd, scale, k=10, num_shards=num_shards,
+                       merge="driver", prepartitioned=True)
+        assert rows(srv) == expected
+        serving.unpersist()
+
+    qw = quantize(w, scale)
+    for num_shards in (1, 3, 4, 16):
+        path = str(tmp_path / f"idx_place_{num_shards}")
+        build_index(w, path, scale, num_shards=num_shards)
+        check(load_postings(spark, path), num_shards, qw)
+
+    # base ∪ segment: the segment re-indexes 30 base conversations above the
+    # base id range under the base's frozen stats, so each segment doc
+    # carries its base twin's quantized weights under a new doc_id
+    base_dir = str(tmp_path / "incr_place")
+    df_path = str(tmp_path / "frozen_df_place")
+    tf.groupBy("term_id").agg(F.count("*").alias("df")).write.parquet(df_path)
+    n_docs, avgdl = corpus_stats(tf)
+    set_doc_watermark(base_dir, n_docs)
+    batch = tiny_transcripts.filter(F.col("conv_id") < "conv-00000030")
+    seg = build_segment_from_batch(
+        batch, base_dir, FrozenStats(n_docs, avgdl, scale, df_path), 4, 0
+    )
+    seg_map = spark.read.parquet(seg + "_docmap").withColumnRenamed("doc_id", "seg_doc")
+    seg_qw = (
+        qw.join(tiny_documents.select("doc_id", "conv_id"), "doc_id")
+        .join(seg_map, "conv_id")
+        .select(F.col("seg_doc").alias("doc_id"), "term", "term_id", "weight")
+    )
+    assert seg_qw.select("doc_id").distinct().count() == 30
+    union = load_all_postings(spark, base_dir, base_index=str(tmp_path / "idx_place_4"))
+    check(union, 4, qw.unionByName(seg_qw))

@@ -151,7 +151,7 @@ def write_engine_plans(spark, sf_dir, tag, cpus, outdir="plans/r06"):
                     tdir + "/b", scale, num_shards=num_shards, resume=False)
         segs = [load_postings(spark, tdir + "/a"), load_postings(spark, tdir + "/b")]
         plans["segment_merge"] = _explain_str(
-            merge_postings(segs, scale, bits=8, codec="varint")
+            merge_postings(segs, bits=8, codec="varint")
         )
         postings = load_postings(spark, tdir + "/a").cache()
         postings.count()

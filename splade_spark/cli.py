@@ -50,9 +50,11 @@ def main(argv: list[str] | None = None) -> int:
                     help="posting delta codec: LEB128 varint or "
                          "fixed-width FOR bitpack (faster decode)")
     bp.add_argument("--streaming-encoder", action="store_true",
-                    help="bounded-memory streaming encode (JVM sort + "
-                         "cross-batch carry) instead of the default "
-                         "python-side partition lexsort")
+                    help="bounded-memory streaming encode: Spark sorts "
+                         "each partition and the Arrow encoder carries the "
+                         "trailing (shard, term) group across batches, "
+                         "instead of the default in-worker partition "
+                         "lexsort (memory O(partition))")
 
     qp = sub.add_parser("query", help="top-k BM25 retrieval")
     qp.add_argument("--index", default=None, help="parquet index dir")

@@ -78,15 +78,38 @@ def assign_doc_ids(
     # attach an integer (guide §4: eliminate the JVM↔Python boundary).
     # Partitions are bounded at 2^33 rows by the id encoding — far above
     # any sane partition sizing.
+    return _attach_doc_ids(with_pid, offsets, docs.columns)
+
+
+def _attach_doc_ids(
+    with_pid: DataFrame, offsets: dict[int, int], columns: list[str]
+) -> DataFrame:
+    """doc_id = offsets[_pid] + local row number, read off
+    monotonically_increasing_id's (partition << 33) | row layout. Spark
+    documents that layout only as its current implementation, so a row
+    whose id does not carry its own _pid fails the query loudly instead
+    of silently breaking doc_id density."""
     max_pid = max(offsets) if offsets else 0
     off_arr = F.array(
         *[F.lit(int(offsets.get(p, 0))) for p in range(max_pid + 1)]
     )
-    local = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
-    doc_id = (
-        F.element_at(off_arr, F.col("_pid") + 1) + local
-    ).cast("long").alias("doc_id")
-    return with_pid.select(doc_id, *docs.columns)
+    # one id per row, computed in its own projection: Catalyst never
+    # collapses a nondeterministic expression into a consumer that reads
+    # it twice, so the check and the id below see the same value
+    mid = F.col("_mid")
+    doc_id = F.when(
+        F.shiftright(mid, 33) != F.col("_pid"),
+        F.raise_error(F.lit(
+            "assign_doc_ids: monotonically_increasing_id no longer carries "
+            "the partition index in bits 33+; doc ids would be wrong"
+        )),
+    ).otherwise(
+        F.element_at(off_arr, F.col("_pid") + 1)
+        + mid.bitwiseAND(F.lit((1 << 33) - 1))
+    )
+    return with_pid.withColumn("_mid", F.monotonically_increasing_id()).select(
+        doc_id.cast("long").alias("doc_id"), *columns
+    )
 
 
 def build_documents(

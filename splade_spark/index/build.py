@@ -16,7 +16,7 @@ as per-term arrays (:86-88). Spark-native redesign:
   shards partition docID space.
 - Within a (shard, term) group, postings are docID-sorted and cut into
   128-entry blocks, delta+varint docIDs, u8-quantized weights, integer
-  block_max (codec.py) — one Arrow grouped-map UDF, numpy-vectorized.
+  block_max (codec.py) — one mapInArrow encoder, numpy-vectorized.
 - Output is a parquet table partitioned by shard_id (Iceberg-ready: same
   layout via `writeTo(...).partitionedBy(shard_id)`), with per-shard
   checkpoint ledger entries carrying lineage + postings/sec metrics, so a
@@ -31,17 +31,16 @@ makes per-shard writes idempotent.
 from __future__ import annotations
 
 import json
-
 import os
 import time
 
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import BLOCK_SIZE
-from .codec import check_bits, encode_groups
+from .codec import check_bits, encode_groups, quantize_weights
 
 POSTINGS_SCHEMA = (
     "shard_id int, term_id long, block_id int, first_doc long, last_doc long, "
@@ -55,6 +54,67 @@ def with_shard(weights: DataFrame, num_shards: int) -> DataFrame:
     )
 
 
+def encode_partitions(spark: SparkSession) -> int:
+    """Partition count of the build's and the merge's encode stage.
+
+    Explicit, because AQE's coalescePartitions would shrink this
+    CPU-bound, byte-light stage to a handful of partitions based on
+    shuffle bytes alone; a user-specified repartition(N) is exempt."""
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+        spark.sparkContext.defaultParallelism * 2,
+    )
+
+
+def shard_sorted(postings: DataFrame, num_shards: int) -> DataFrame:
+    """Sink arrangement of the encoded blocks: one partition per shard,
+    term-sorted. Each shard then writes ~one term-sorted file (not
+    encode_partitions × shards slivers, whose serial commit renames
+    dominate), and the query path gets tight term_id row-group pruning."""
+    return postings.repartition(num_shards, "shard_id").sortWithinPartitions(
+        "shard_id", "term_id", "block_id"
+    )
+
+
+def postings_batch(g: dict):
+    """encode_groups output → one POSTINGS_SCHEMA RecordBatch, built
+    straight from its numpy arrays and byte lists."""
+    types = {
+        "shard_id": pa.int32(), "term_id": pa.int64(), "block_id": pa.int32(),
+        "first_doc": pa.int64(), "last_doc": pa.int64(), "n": pa.int32(),
+        "doc_bytes": pa.binary(), "w_bytes": pa.binary(),
+        "block_max": pa.int32(),
+    }
+    return pa.RecordBatch.from_arrays(
+        [pa.array(g[k], type=t) for k, t in types.items()], names=list(types)
+    )
+
+
+def stream_sorted_groups(batches, encode):
+    """Encode Arrow batches sorted by (shard_id, term_id, ...) with
+    memory O(batch + one group).
+
+    Every run of complete (shard, term) groups goes to ``encode(table)``
+    (→ an encode_groups dict) and comes back as one postings batch; the
+    trailing, possibly incomplete group is carried into the next batch."""
+    pending = None
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        tbl = pa.Table.from_batches([rb])
+        if pending is not None:
+            tbl = pa.concat_tables([pending, tbl])
+        s = tbl.column("shard_id").to_numpy()
+        t = tbl.column("term_id").to_numpy()
+        not_tail = np.flatnonzero((s != s[-1]) | (t != t[-1]))
+        cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
+        pending = tbl.slice(cut)
+        if cut:
+            yield postings_batch(encode(tbl.slice(0, cut)))
+    if pending is not None:
+        yield postings_batch(encode(pending))
+
+
 def build_postings(
     weights: DataFrame,
     scale: float,
@@ -63,27 +123,16 @@ def build_postings(
     bits: int = 8,
     local_sort: bool = True,
     codec: str = "varint",
-    prequantize: bool = False,
 ) -> DataFrame:
     """(doc_id, term_id, weight) → compressed posting blocks.
 
     One shuffle — repartition on (shard_id, term_id) — then one vectorized
-    Arrow encoder (mapInPandas) whose batches cover ALL the partition's
-    (shard, term) groups (codec.encode_groups). A grouped-map per
-    (shard, term) is wrong at scale in both directions: Zipf tails make
-    millions of tiny groups (per-group pandas overhead dominates), and a
-    per-shard grouping would buffer whole shards in memory.
-
-    prequantize=True: quantize the weight JVM-side BEFORE the shuffle —
-    ``least(hi, greatest(0, bround(w*scale)))`` cast to int, exactly
-    quantize_weights' rint-then-clip (F.bround is HALF_EVEN like np.rint;
-    asserted byte-identical to the float path in test_index_build). The
-    engine's central shuffle then carries a low-entropy int32 instead of
-    a float64. Measured on this box (42M postings, local[16]): ~5-9%
-    SLOWER — the extra JVM expression eval costs more than the 4-of-28
-    bytes saved in a memory-local shuffle — so the float path stays the
-    default; the knob exists for network-shuffle clusters where shuffle
-    bytes, not map-side CPU, are the constraint.
+    Arrow encoder (mapInArrow) whose batches cover ALL the partition's
+    (shard, term) groups (codec.encode_groups, fed weights quantized by
+    codec.quantize_weights). A grouped-map per (shard, term) is wrong at
+    scale in both directions: Zipf tails make millions of tiny groups
+    (per-group pandas overhead dominates), and a per-shard grouping would
+    buffer whole shards in memory.
 
     local_sort=True (default): rows are sorted *inside the Python worker*
     (np.lexsort over the buffered partition) instead of with Spark's
@@ -95,127 +144,46 @@ def build_postings(
     ~8–32M rows (spark.sql.shuffle.partitions, or defaultParallelism).
 
     local_sort=False: Spark sorts (shard, term, doc) within partitions and
-    a streaming encoder carries the trailing possibly-incomplete group
+    stream_sorted_groups carries the trailing possibly-incomplete group
     across batches — memory O(arrow batch + one group) regardless of
     partition size; use it when partitions can't be bounded.
     """
+    cols = ["shard_id", "term_id", "doc_id", "weight"]
+
+    def encode(s, t, d, w):
+        return encode_groups(
+            s, t, d, quantize_weights(w, scale, bits),
+            block_size=block_size, bits=bits, codec=codec,
+        )
 
     def encode_partition(batches):
         """Arrow-native partition encoder: the int64/float64 input columns
         come out of the Arrow buffers as numpy views (one combine_chunks
         materialization, no pandas frame construction), and the encoded
-        blocks go back as ONE RecordBatch built straight from the numpy
-        outputs of encode_groups — the pandas round trip this replaces
-        copied every input column twice per partition (guide §4.2: hand
-        whole batches to vectorized native code)."""
-        import numpy as np
-        import pyarrow as pa
-
+        blocks go back as ONE RecordBatch."""
         chunks = [rb for rb in batches if rb.num_rows]
         if not chunks:
             return
         tbl = pa.Table.from_batches(chunks).combine_chunks()
-        s = tbl.column("shard_id").to_numpy()
-        t = tbl.column("term_id").to_numpy()
-        d = tbl.column("doc_id").to_numpy()
-        w = tbl.column("weight").to_numpy()
+        s, t, d, w = (tbl.column(c).to_numpy() for c in cols)
         o = np.lexsort((d, t, s))  # stable; (shard,term,doc) keys are unique
-        g = encode_groups(
-            s[o], t[o], d[o], w[o], scale,
-            block_size=block_size, bits=bits, codec=codec,
-            prequantized=prequantize,
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(g["shard_id"], type=pa.int32()),
-                pa.array(g["term_id"], type=pa.int64()),
-                pa.array(g["block_id"], type=pa.int32()),
-                pa.array(g["first_doc"], type=pa.int64()),
-                pa.array(g["last_doc"], type=pa.int64()),
-                pa.array(g["n"], type=pa.int32()),
-                pa.array(g["doc_bytes"], type=pa.binary()),
-                pa.array(g["w_bytes"], type=pa.binary()),
-                pa.array(g["block_max"], type=pa.int32()),
-            ],
-            names=[
-                "shard_id", "term_id", "block_id", "first_doc", "last_doc",
-                "n", "doc_bytes", "w_bytes", "block_max",
-            ],
+        yield postings_batch(encode(s[o], t[o], d[o], w[o]))
+
+    def encode_sorted(batches):
+        return stream_sorted_groups(
+            batches, lambda tbl: encode(*(tbl.column(c).to_numpy() for c in cols))
         )
 
-    def encode_stream(batches):
-        import numpy as np
-
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            s = pdf["shard_id"].to_numpy()
-            t = pdf["term_id"].to_numpy()
-            same_tail = (s == s[-1]) & (t == t[-1])
-            not_tail = np.flatnonzero(~same_tail)
-            cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
-            pending = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield pd.DataFrame(
-                    encode_groups(
-                        body["shard_id"].to_numpy(),
-                        body["term_id"].to_numpy(),
-                        body["doc_id"].to_numpy(),
-                        body["weight"].to_numpy(),
-                        scale,
-                        block_size=block_size,
-                        bits=bits,
-                        codec=codec,
-                        prequantized=prequantize,
-                    )
-                )
-        if pending is not None and len(pending):
-            yield pd.DataFrame(
-                encode_groups(
-                    pending["shard_id"].to_numpy(),
-                    pending["term_id"].to_numpy(),
-                    pending["doc_id"].to_numpy(),
-                    pending["weight"].to_numpy(),
-                    scale,
-                    block_size=block_size,
-                    bits=bits,
-                    codec=codec,
-                    prequantized=prequantize,
-                )
-            )
-
-    sharded = with_shard(weights, num_shards)
-    if prequantize:
-        hi_q = float(2**bits - 1)
-        sharded = sharded.withColumn(
-            "weight",
-            F.least(
-                F.lit(hi_q),
-                F.greatest(F.lit(0.0), F.bround(F.col("weight") * F.lit(float(scale)))),
-            ).cast("int"),
-        )
-    # explicit partition count — AQE's coalescePartitions would shrink this
-    # CPU-bound encode stage to a handful of partitions based on shuffle
-    # bytes alone; user-specified repartition(N) is exempt from coalescing
-    spark = weights.sparkSession
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        spark.sparkContext.defaultParallelism * 2,
+    arranged = with_shard(weights, num_shards).repartition(
+        encode_partitions(weights.sparkSession), "shard_id", "term_id"
     )
     if local_sort:
-        arranged = sharded.repartition(n_part, "shard_id", "term_id")
-        return arranged.select(
-            "shard_id", "term_id", "doc_id", "weight"
-        ).mapInArrow(encode_partition, schema=POSTINGS_SCHEMA)
-    arranged = sharded.repartition(n_part, "shard_id", "term_id").sortWithinPartitions(
-        "shard_id", "term_id", "doc_id"
-    )
-    return arranged.mapInPandas(encode_stream, schema=POSTINGS_SCHEMA)
+        return arranged.select(*cols).mapInArrow(
+            encode_partition, schema=POSTINGS_SCHEMA
+        )
+    return arranged.sortWithinPartitions("shard_id", "term_id", "doc_id").select(
+        *cols
+    ).mapInArrow(encode_sorted, schema=POSTINGS_SCHEMA)
 
 
 def _ledger_dir(path: str) -> str:
@@ -337,16 +305,8 @@ def build_index(
         codec=codec,
         local_sort=local_sort,
     )
-    # Range-repartition the (small) encoded blocks so each shard writes ~one
-    # term-sorted file: without this, encode_partitions × shards files get
-    # committed (serial renames dominate), and term row-group stats are
-    # interleaved. Term-sorted files give the query path tight min/max
-    # pruning on term_id.
-    arranged = postings.repartition(num_shards, "shard_id").sortWithinPartitions(
-        "shard_id", "term_id", "block_id"
-    )
     (
-        arranged.write.mode("overwrite")
+        shard_sorted(postings, num_shards).write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("shard_id")
         .parquet(path)
@@ -434,10 +394,7 @@ def write_postings_iceberg(
             "org.apache.iceberg:iceberg-spark-runtime via spark.jars.packages "
             "or use the parquet path (build_index fmt='parquet')"
         )
-    arranged = postings.repartition(num_shards, "shard_id").sortWithinPartitions(
-        "shard_id", "term_id", "block_id"
-    )
-    writer = arranged.writeTo(table)
+    writer = shard_sorted(postings, num_shards).writeTo(table)
     for k, v in (properties or {}).items():
         writer = writer.tableProperty(k, str(v))
     writer.partitionedBy(F.col("shard_id")).createOrReplace()

@@ -10,8 +10,8 @@ bytes, block_max over the stored *quantized* weights) — block_max in the
 integer domain matching POSTINGS_SCHEMA and the WAND kernel's integer
 scoring keeps block-max pruning rank-safe with no float round-trip.
 
-Everything is vectorized numpy — these functions run inside Arrow grouped-map
-UDFs on executors; no per-row Python.
+Everything is vectorized numpy — these functions run inside the build's and
+the merge's mapInArrow encoders on executors; no per-row Python.
 """
 
 from __future__ import annotations
@@ -238,17 +238,18 @@ def encode_groups(
     shard: np.ndarray,
     term: np.ndarray,
     doc: np.ndarray,
-    weight: np.ndarray,
-    scale: float,
+    q: np.ndarray,
     block_size: int = BLOCK_SIZE,
     bits: int = 8,
     codec: str = "varint",
-    prequantized: bool = False,
 ) -> dict[str, list]:
     """Encode MANY (shard, term) posting groups in one vectorized pass.
 
-    Input arrays must be sorted by (shard, term, doc) — the build shuffle's
-    sortWithinPartitions guarantees this. Group/block boundaries, deltas,
+    Input arrays must be sorted by (shard, term, doc): the build's
+    partition encoder lexsorts them, and its streaming encoder and the
+    merge read them from a sortWithinPartitions. ``q`` holds the
+    already-quantized integer weights (``quantize_weights`` in the build,
+    the decoded stored weights in the merge). Group/block boundaries, deltas,
     varint packing, and block maxima are all computed with cumsum/reduceat;
     the only Python loop slices the shared byte buffers per block (cheap).
     This replaces a per-group applyInPandas, whose per-group pandas overhead
@@ -272,14 +273,8 @@ def encode_groups(
             )
         }
     doc = np.asarray(doc, dtype=np.int64)
-    if prequantized:
-        # weights arrived as integers already rint'ed+clipped JVM-side
-        # (build_postings prequantize path) — same value domain as
-        # quantize_weights, asserted byte-identical in test_index_build
-        check_bits(bits)
-        q = np.asarray(weight).astype(np.uint8 if bits <= 8 else np.uint16)
-    else:
-        q = quantize_weights(np.asarray(weight), scale, bits)
+    wdtype = np.uint8 if check_bits(bits) <= 8 else np.uint16
+    q = np.asarray(q).astype(wdtype, copy=False)
 
     new_grp = np.empty(n, dtype=bool)
     new_grp[0] = True
@@ -317,8 +312,8 @@ def encode_groups(
     w_bytes = [wbuf[blk_start[b] * isz : blk_end[b] * isz] for b in range(nb)]
     block_max = np.maximum.reduceat(q, blk_start).astype(np.int32)
 
-    # numeric fields stay numpy (no per-element .tolist() boxing): both the
-    # pandas and the Arrow encode sinks consume arrays directly
+    # numeric fields stay numpy (no per-element .tolist() boxing):
+    # build.postings_batch wraps the arrays directly
     return {
         "shard_id": np.asarray(shard)[blk_start].astype(np.int32),
         "term_id": np.asarray(term)[blk_start].astype(np.int64),

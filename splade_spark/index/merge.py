@@ -11,13 +11,13 @@ idea; in-repo, the reference rebuilds from scratch — inverted_index.py:23-46).
 The merge itself is one Spark job: union the segments' postings (still
 block-compressed — the shuffle carries compressed blocks, never raw posting
 rows), repartition by (shard, term) + sortWithinPartitions(shard, term,
-first_doc), then a *streaming* mapInPandas that decodes, concatenates by
-docID and re-encodes every complete (shard, term) group per Arrow batch,
-carrying the trailing possibly-incomplete group into the next batch — the
-same carry-the-tail shape as the build encoder (build.py:encode_stream).
-A per-group applyInPandas is wrong here for the same reason it was wrong
-in the build: Zipf tails create millions of tiny (shard, term) groups and
-per-group pandas overhead dominates. Because shards partition docID space
+first_doc), then the build's streaming mapInArrow encoder
+(build.py:stream_sorted_groups) decodes, concatenates by docID and
+re-encodes every complete (shard, term) group per Arrow batch, carrying
+the trailing possibly-incomplete group into the next batch. A per-group
+applyInPandas is wrong here for the same reason it was wrong in the build:
+Zipf tails create millions of tiny (shard, term) groups and per-group
+pandas overhead dominates. Because shards partition docID space
 identically in every segment (same num_shards), the merge never crosses
 shards; segments are docID-disjoint, so blocks sorted by first_doc
 concatenate into a globally docID-sorted list per group.
@@ -25,19 +25,36 @@ concatenate into a globally docID-sorted list per group.
 
 from __future__ import annotations
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import numpy as np
+from .build import (
+    POSTINGS_SCHEMA,
+    _write_index_meta,
+    encode_partitions,
+    read_index_meta,
+    shard_sorted,
+    stream_sorted_groups,
+)
+from .codec import check_bits, decode_for, decode_varint, encode_groups
 
-from .build import POSTINGS_SCHEMA, _write_index_meta, read_index_meta
-from .codec import decode_block_raw, decode_varint, encode_groups
+
+def _binary_values(col: pa.ChunkedArray) -> np.ndarray:
+    """The concatenated value bytes of an Arrow binary column, read
+    zero-copy from its data buffer (offsets[0]..offsets[-1])."""
+    arr = col.combine_chunks()
+    _, offs_buf, data = arr.buffers()
+    if data is None:
+        return np.empty(0, dtype=np.uint8)
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offs_buf, dtype=otype)[arr.offset :][: len(arr) + 1]
+    return np.frombuffer(data, dtype=np.uint8)[offs[0] : offs[-1]]
 
 
 def merge_postings(
     segments: list[DataFrame],
-    scale: float,
     block_size: int = 128,
     bits: int = 8,
     codec: str = "varint",
@@ -47,92 +64,54 @@ def merge_postings(
     Streaming re-encode (see module docstring): one repartition of the
     compressed blocks, then all complete (shard, term) groups in each
     Arrow batch are decoded + re-encoded in a single vectorized
-    encode_groups pass. The decode side stays in the integer quantized
-    domain end to end (decoded weights feed encode_groups with
-    prequantized=True), which is byte-identical to the old
-    dequantize-then-requantize round trip — rint((q/scale)*scale) == q —
-    without the two float passes. Varint doc deltas for ALL blocks in a
-    batch decode in ONE vectorized pass over the concatenated byte
-    streams (segmented cumsum reconstructs absolute docIDs), replacing
-    the per-block Python decode loop."""
+    encode_groups pass. The merge stays in the integer quantized domain
+    end to end: the stored weights feed encode_groups unchanged, which
+    is byte-identical to a from-scratch build over the union. Doc deltas
+    and weights for ALL blocks in a batch are read straight from the
+    Arrow binary columns' data buffers; varint deltas decode in ONE
+    vectorized pass over the concatenated byte stream (FOR blocks decode
+    one by one), and a segmented cumsum reconstructs absolute docIDs."""
     unioned = segments[0]
     for s in segments[1:]:
         unioned = unioned.unionByName(s)
-    spark = unioned.sparkSession
-    # explicit partition count — AQE would coalesce this CPU-heavy,
-    # byte-light stage down to a handful of partitions
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-        spark.sparkContext.defaultParallelism * 2,
-    )
     arranged = unioned.repartition(
-        n_part, "shard_id", "term_id"
+        encode_partitions(unioned.sparkSession), "shard_id", "term_id"
     ).sortWithinPartitions("shard_id", "term_id", "first_doc")
 
-    wdtype = np.uint8 if bits <= 8 else np.uint16
+    wdtype = np.uint8 if check_bits(bits) <= 8 else np.uint16
 
-    def _reencode_rows(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_arr = pdf["n"].to_numpy(np.int64)
-        first = pdf["first_doc"].to_numpy(np.int64)
-        total = int(n_arr.sum())
+    def reencode(tbl: pa.Table) -> dict:
+        n_arr = tbl.column("n").to_numpy().astype(np.int64)
+        first = tbl.column("first_doc").to_numpy()
         if codec == "varint":
-            # one vectorized decode of every block's delta stream: LEB128
-            # is self-delimiting, so the concatenated buffers parse in a
-            # single pass (sum(n-1) deltas, in block order)
-            deltas = decode_varint(b"".join(pdf["doc_bytes"])).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
-            vals = np.empty(total, dtype=np.int64)
-            mask = np.ones(total, dtype=bool)
-            mask[starts] = False
-            vals[starts] = first
-            vals[mask] = deltas
-            c = np.cumsum(vals)
-            # segmented cumsum: doc[j] = first_b + Σ deltas in block b
-            doc = c - np.repeat(c[starts] - first, n_arr)
-            q = np.frombuffer(
-                b"".join(pdf["w_bytes"]), dtype=wdtype
-            ).astype(np.int64)
+            # LEB128 is self-delimiting, so the concatenated buffers parse
+            # in a single pass (sum(n-1) deltas, in block order)
+            deltas = decode_varint(_binary_values(tbl.column("doc_bytes")))
         else:
-            docs_all, w_all = [], []
-            for f, n, db, wb in zip(
-                pdf["first_doc"], pdf["n"], pdf["doc_bytes"], pdf["w_bytes"]
-            ):
-                d, w = decode_block_raw(int(f), int(n), db, wb, bits, codec)
-                docs_all.append(d)
-                w_all.append(w)
-            doc = np.concatenate(docs_all)
-            q = np.concatenate(w_all)
-        shard_rep = np.repeat(pdf["shard_id"].to_numpy(), n_arr)
-        term_rep = np.repeat(pdf["term_id"].to_numpy(), n_arr)
-        return pd.DataFrame(
-            encode_groups(
-                shard_rep, term_rep, doc, q, scale,
-                block_size=block_size, bits=bits, codec=codec,
-                prequantized=True,
-            )
+            deltas = np.concatenate([
+                decode_for(db, int(n) - 1)
+                for db, n in zip(tbl.column("doc_bytes").to_pylist(), n_arr)
+            ])
+        starts = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
+        vals = np.empty(int(n_arr.sum()), dtype=np.int64)
+        mask = np.ones(len(vals), dtype=bool)
+        mask[starts] = False
+        vals[starts] = first
+        vals[mask] = deltas.astype(np.int64)
+        c = np.cumsum(vals)
+        # segmented cumsum: doc[j] = first_b + Σ deltas in block b
+        doc = c - np.repeat(c[starts] - first, n_arr)
+        q = _binary_values(tbl.column("w_bytes")).view(wdtype)
+        return encode_groups(
+            np.repeat(tbl.column("shard_id").to_numpy(), n_arr),
+            np.repeat(tbl.column("term_id").to_numpy(), n_arr),
+            doc, q, block_size=block_size, bits=bits, codec=codec,
         )
 
-    def reencode_stream(batches):
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if len(pdf) == 0:
-                continue
-            s = pdf["shard_id"].to_numpy()
-            t = pdf["term_id"].to_numpy()
-            same_tail = (s == s[-1]) & (t == t[-1])
-            not_tail = np.flatnonzero(~same_tail)
-            cut = int(not_tail[-1]) + 1 if len(not_tail) else 0
-            pending = pdf.iloc[cut:]
-            body = pdf.iloc[:cut]
-            if len(body):
-                yield _reencode_rows(body)
-        if pending is not None and len(pending):
-            yield _reencode_rows(pending)
-
-    return arranged.mapInPandas(reencode_stream, schema=POSTINGS_SCHEMA)
+    return arranged.mapInArrow(
+        lambda batches: stream_sorted_groups(batches, reencode),
+        schema=POSTINGS_SCHEMA,
+    )
 
 
 def merge_indexes(
@@ -181,20 +160,15 @@ def merge_indexes(
                 f"segment docID ranges overlap ({lo_a}..{hi_a} vs {lo_b}..): "
                 "merge requires docID-disjoint segments (watermark-allocated)"
             )
-    merged = merge_postings(
-        segs, scale, block_size,
-        bits=metas[0].get("bits", 8),
-        codec=metas[0].get("codec", "varint"),
-    )
-    # Same sink arrangement as build_index: range the (small, compressed)
-    # blocks into one partition per shard so each shard directory gets ~one
-    # term-sorted file. Without this every re-encode partition writes its
-    # own sliver into every shard dir (encode_partitions × shards files —
-    # measured 2 048 at the bench shape): the commit's serial renames
-    # dominate merge wall time and the query path loses tight term_id
-    # row-group pruning.
-    merged = merged.repartition(num_shards, "shard_id").sortWithinPartitions(
-        "shard_id", "term_id", "block_id"
+    # same sink arrangement as build_index (without it, 2 048 slivers at
+    # the bench shape, whose serial commit renames dominated merge time)
+    merged = shard_sorted(
+        merge_postings(
+            segs, block_size,
+            bits=metas[0].get("bits", 8),
+            codec=metas[0].get("codec", "varint"),
+        ),
+        num_shards,
     )
     # STATIC overwrite, unlike build_index's dynamic mode: dynamic only
     # replaces partitions present in the new data, so a merge into a path

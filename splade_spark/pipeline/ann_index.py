@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -56,6 +57,11 @@ def _write_meta(path: str, meta: dict) -> None:
 def read_ann_meta(path: str) -> dict:
     with open(os.path.join(path, ANN_META)) as fh:
         return json.load(fh)
+
+
+# serializes _read_probed_partitions' set → eager read → restore of the
+# session-global partition-discovery threshold
+_LISTING_CONF_LOCK = threading.Lock()
 
 
 def _read_probed_partitions(
@@ -101,17 +107,20 @@ def _read_probed_partitions(
         # above parallelPartitionDiscovery.threshold=32 paths and costs
         # ~2.5 s per call against ~0.2 s serial on a local FS; on object
         # stores, where the job earns its keep, os.listdir fails above
-        # and this branch never runs). Conf restored immediately.
+        # and this branch never runs). Conf restored immediately, under a
+        # lock: the conf is session-global, and two serving threads
+        # interleaving set/restore would leave the override in place.
         key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        old = spark.conf.get(key)
-        spark.conf.set(key, "1000000")
-        try:
-            r = spark.read
-            if base:
-                r = r.option("basePath", base)
-            return r.parquet(*paths)  # listing happens eagerly here
-        finally:
-            spark.conf.set(key, old)
+        with _LISTING_CONF_LOCK:
+            old = spark.conf.get(key)
+            spark.conf.set(key, "1000000")
+            try:
+                r = spark.read
+                if base:
+                    r = r.option("basePath", base)
+                return r.parquet(*paths)  # listing happens eagerly here
+            finally:
+                spark.conf.set(key, old)
 
     probes = list(probes)
     if names is not None:

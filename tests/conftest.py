@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import tempfile
 
@@ -40,3 +41,24 @@ def tiny_documents(spark, tiny_transcripts):
     from splade_spark.documents import build_documents
 
     return build_documents(tiny_transcripts, partitions=4).cache()
+
+
+@pytest.fixture
+def arrow_batch_rows(spark):
+    """``with arrow_batch_rows(n):`` runs its body with Arrow batches of n
+    rows (None: the session default), restoring the conf afterwards.
+    Tiny batches split (shard, term) groups across batches, which the
+    tier-1 corpora never do at the default 65,536 rows."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    @contextlib.contextmanager
+    def _rows(n):
+        old = spark.conf.get(key)
+        if n is not None:
+            spark.conf.set(key, str(n))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return _rows

@@ -302,3 +302,45 @@ def test_append_kind_guard(spark, lsh_path, ivf_path, emb):
         append_ivf_index(emb, lsh_path)
     with pytest.raises(ValueError, match="not lsh"):
         append_lsh_index(emb, ivf_path)
+
+
+def test_lsh_probe_threads_restore_listing_conf(spark, lsh_path, qvecs):
+    """Concurrent probes on one session: the partition-discovery threshold
+    the probed read overrides is session-global, so every thread's
+    set → read → restore must be serialized — afterwards the conf holds
+    its original value, and each thread's result equals the serial one."""
+    import sys
+    import threading
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    original = spark.conf.get(key)
+    n = 6
+    queries = [qvecs.iloc[[i % len(qvecs)]].reset_index(drop=True)
+               for i in range(n)]
+    serial = [_key(lsh_topk_from_index(spark, lsh_path, q, k=5).collect())
+              for q in queries]
+    barrier = threading.Barrier(n)
+    got: list = [None] * n
+
+    def probe(i):
+        barrier.wait(timeout=60)
+        try:
+            got[i] = _key(
+                lsh_topk_from_index(spark, lsh_path, queries[i], k=5).collect()
+            )
+        except Exception as e:  # surfaced by the assertion below
+            got[i] = e
+
+    threads = [threading.Thread(target=probe, args=(i,)) for i in range(n)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert spark.conf.get(key) == original
+    assert got == serial

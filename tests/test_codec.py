@@ -99,7 +99,8 @@ def test_encode_groups_for_equals_varint(postings):
     scale = 255.0 / 20.0
     decoded = {}
     for codec in ("varint", "for"):
-        g = encode_groups(shard, term, docs, weights, scale,
+        g = encode_groups(shard, term, docs,
+                          quantize_weights(weights, scale),
                           block_size=64, codec=codec)
         dd, ww = [], []
         for fd, n, db, wb in zip(g["first_doc"], g["n"],

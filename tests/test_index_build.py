@@ -28,31 +28,31 @@ def corpus(spark, tiny_documents):
     return tf, w, scale
 
 
-def test_local_sort_equals_jvm_sort(spark, corpus):
+def test_local_sort_equals_jvm_sort(spark, corpus, arrow_batch_rows):
     """The python-lexsort encoder (default) and the JVM-sort streaming
-    encoder must emit block-identical postings."""
+    encoder must emit block-identical postings, for every codec × width,
+    also when tiny Arrow batches split (shard, term) groups across
+    batches (the streaming encoder's carry)."""
     from splade_spark.index.build import build_postings
 
-    _, w, scale = corpus
-    a = build_postings(w, scale, num_shards=8, local_sort=True)
-    b = build_postings(w, scale, num_shards=8, local_sort=False)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_prequantize_equals_float_path(spark, corpus):
-    """JVM-side bround-quantize-before-shuffle (default) must be
-    byte-identical to shuffling the float and quantizing with np.rint in
-    the kernel — F.bround and np.rint are both HALF_EVEN over the same
-    float64 product, so every block (doc_bytes AND w_bytes) matches."""
-    from splade_spark.index.build import build_postings
-
-    _, w, scale = corpus
-    a = build_postings(w, scale, num_shards=8, prequantize=True)
-    b = build_postings(w, scale, num_shards=8, prequantize=False)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # and on the streaming (JVM-sort) encoder too
-    c = build_postings(w, scale, num_shards=8, local_sort=False, prequantize=True)
-    assert a.exceptAll(c).count() == 0 and c.exceptAll(a).count() == 0
+    _, w, _ = corpus
+    for codec in ("varint", "for"):
+        for bits in (8, 16):
+            scale = quantization_scale(w, bits)
+            a = build_postings(
+                w, scale, num_shards=8, bits=bits, codec=codec
+            ).cache()
+            a.count()
+            for rows in (None, 3, 7):
+                with arrow_batch_rows(rows):
+                    b = build_postings(
+                        w, scale, num_shards=8, bits=bits, codec=codec,
+                        local_sort=False,
+                    ).cache()
+                    assert a.exceptAll(b).count() == 0, (codec, bits, rows)
+                    assert b.exceptAll(a).count() == 0, (codec, bits, rows)
+                    b.unpersist()
+            a.unpersist()
 
 
 def test_resume_repairs_missing_meta(spark, corpus, tmp_path):

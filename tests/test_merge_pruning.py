@@ -22,27 +22,42 @@ def corpus(spark, tiny_documents):
     return tf, w, quantization_scale(w)
 
 
-def test_segment_merge_equals_full_build(spark, corpus, tmp_path):
-    """Two doc-disjoint segments merged == index built over the union."""
-    tf, w, scale = corpus
+def test_segment_merge_equals_full_build(spark, corpus, tmp_path, arrow_batch_rows):
+    """Two doc-disjoint segments merged == index built over the union, for
+    every codec × width (the FOR decode and u16 weight paths), also when
+    tiny Arrow batches split (shard, term) groups across batches."""
+    _, w, _ = corpus
     seg_a = w.filter(F.col("doc_id") < 50)
     seg_b = w.filter(F.col("doc_id") >= 50)
-    pa, pb, pm, pf = (str(tmp_path / x) for x in ["a", "b", "m", "full"])
-    build_index(seg_a, pa, scale, num_shards=4)
-    build_index(seg_b, pb, scale, num_shards=4)
-    build_index(w, pf, scale, num_shards=4)
-    merge_indexes(spark, [pa, pb], pm)
-
-    # strongest form: the merged index is BLOCK-identical to the
-    # from-scratch build (same blocking, same bytes), not just
-    # query-equivalent — re-encode round-trips quantized values exactly
-    m, f = load_postings(spark, pm), load_postings(spark, pf)
-    assert m.exceptAll(f).count() == 0 and f.exceptAll(m).count() == 0
-
     qt = query_term_freqs(queries_df(spark)).cache()
-    res_m = retrieve(load_postings(spark, pm), qt, scale, k=20)
-    res_f = retrieve(load_postings(spark, pf), qt, scale, k=20)
-    assert sorted(map(tuple, res_m.collect())) == sorted(map(tuple, res_f.collect()))
+    for codec in ("varint", "for"):
+        for bits in (8, 16):
+            scale = quantization_scale(w, bits)
+            enc = dict(num_shards=4, bits=bits, codec=codec)
+            pa, pb, pf = (str(tmp_path / f"{x}_{codec}{bits}") for x in "abf")
+            build_index(seg_a, pa, scale, **enc)
+            build_index(seg_b, pb, scale, **enc)
+            build_index(w, pf, scale, **enc)
+            f = load_postings(spark, pf)
+            for rows in (None, 3, 7):
+                pm = str(tmp_path / f"m_{codec}{bits}_{rows}")
+                with arrow_batch_rows(rows):
+                    merge_indexes(spark, [pa, pb], pm)
+
+                # strongest form: the merged index is BLOCK-identical to
+                # the from-scratch build (same blocking, same bytes), not
+                # just query-equivalent — the merge re-encodes the stored
+                # quantized values unchanged
+                m = load_postings(spark, pm)
+                assert m.exceptAll(f).count() == 0, (codec, bits, rows)
+                assert f.exceptAll(m).count() == 0, (codec, bits, rows)
+
+            res_m = retrieve(load_postings(spark, pm), qt, scale, k=20,
+                             bits=bits, codec=codec)
+            res_f = retrieve(f, qt, scale, k=20, bits=bits, codec=codec)
+            assert sorted(map(tuple, res_m.collect())) == sorted(
+                map(tuple, res_f.collect())
+            )
 
     # merged blocks remain docID-sorted / non-overlapping per (shard, term)
     p = load_postings(spark, pm)

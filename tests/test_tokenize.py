@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from splade_spark.bm25 import bm25_topk, bm25_weights
@@ -43,6 +44,20 @@ def test_documents_build(tiny_transcripts, tiny_documents):
     )
     got = docs.filter(F.col("conv_id") == one).collect()[0].text
     assert got == expected
+
+
+def test_doc_id_layout_check_fails_loudly(spark):
+    """The doc-id expression reads the partition index out of
+    monotonically_increasing_id's high bits; a row whose _pid disagrees
+    (forged here) must fail the query, not yield a wrong id."""
+    from splade_spark.documents import _attach_doc_ids
+
+    rows = spark.range(0, 6, 1, 1)
+    ok = _attach_doc_ids(rows.withColumn("_pid", F.lit(0)), {0: 10}, ["id"])
+    assert [r.doc_id for r in ok.orderBy("id").collect()] == list(range(10, 16))
+    forged = rows.withColumn("_pid", F.lit(3))
+    with pytest.raises(Exception, match="monotonically_increasing_id"):
+        _attach_doc_ids(forged, {3: 0}, ["id"]).collect()
 
 
 def test_bm25_weights_hand_computed(spark):
